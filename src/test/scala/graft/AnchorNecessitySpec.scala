@@ -99,8 +99,11 @@ class AnchorNecessitySpec extends SparkTestBase {
           !m || AnchorGuard.anchored(fold, anchors(i))
         }
       }
+      // seeded: the per-pattern floor below must hold on every run, not
+      // on most draws of a fresh random seed
       val res = SCTest.check(
-        SCTest.Parameters.default.withMinSuccessfulTests(1200), prop)
+        SCTest.Parameters.default.withMinSuccessfulTests(1200)
+          .withInitialSeed(20240517L), prop)
       assert(res.passed, s"$name: ${res.status}")
       // non-vacuous PER PATTERN: every pattern's match->anchored
       // implication must actually fire, or a wrong anchor on a pattern

@@ -15,6 +15,22 @@ class ManifestSpec extends SparkTestBase {
     Pipeline.score(df, spark)
       .select("url", "lang", "overall_score", "keep")
 
+  /** Every manifest row's n_rows / n_kept equal a read-back of the bucket
+    * output it commits (`keep` counts on the score sink, every row on a
+    * sink without one).
+    */
+  private def assertStatsMatchOutput(dir: String): Unit = {
+    val m = spark.read.parquet(Manifest.manifestPath(dir))
+      .select("bucket", "n_rows", "n_kept").collect()
+    assert(m.nonEmpty)
+    m.foreach { r =>
+      val out = spark.read.parquet(Manifest.bucketPath(dir, r.getLong(0)))
+      val kept = if (out.columns.contains("keep")) out.filter(col("keep")) else out
+      assert((r.getLong(1), r.getLong(2)) == ((out.count(), kept.count())),
+        s"bucket ${r.getLong(0)}: manifest (n_rows, n_kept) differs from its output")
+    }
+  }
+
   test("bucketed run commits all buckets; full re-run recomputes zero") {
     val dir = Files.createTempDirectory("graft_manifest").toString
     val input = SynthCorpus.docsRaw(spark, 200, 4).toDF()
@@ -80,6 +96,78 @@ class ManifestSpec extends SparkTestBase {
     val totalStaged = spark.read.parquet(Manifest.stagingPath(dir)).count()
     assert(totalStaged == 100)
     assert(Manifest.readCommitted(spark, dir).count() == 100)
+    (0 until 4).foreach { b =>
+      val bDir = s"${Manifest.stagingPath(dir)}/__bucket=$b"
+      val rows = spark.read.parquet(bDir)
+      assert(rows.filter(pmod(xxhash64(col("url")), lit(4L)) =!= b).count() == 0,
+        s"staged bucket $b holds another bucket's rows")
+      assert(rows.count() == input.filter(pmod(xxhash64(col("url")), lit(4L)) === b).count())
+    }
+  }
+
+  test("each bucket is staged as one file per core and processed on all cores") {
+    val dir = Files.createTempDirectory("graft_manifest_cores").toString
+    val cores = spark.sparkContext.defaultParallelism
+    val input = SynthCorpus.docsRaw(spark, 200, 1).toDF()
+    val partitions = scala.collection.mutable.Buffer.empty[Int]
+    val n = Manifest.runBucketed(spark, input, dir, "url", 2) { df =>
+      partitions += df.rdd.getNumPartitions
+      scoreFn(df)
+    }
+    assert(n == 2)
+    // ~100 rows a bucket: every core's shuffle partition holds rows of both
+    // buckets, so each bucket directory has one file per core
+    (0 until 2).foreach { b =>
+      val files = new java.io.File(s"${Manifest.stagingPath(dir)}/__bucket=$b")
+        .listFiles().count(_.getName.endsWith(".parquet"))
+      assert(files == cores, s"bucket $b staged as $files files, not $cores")
+    }
+    assert(partitions == Seq(cores, cores),
+      s"bucket process inputs had $partitions partitions, not $cores each")
+  }
+
+  test("resume with a different bucket count fails; the staged count completes the run") {
+    val dir = Files.createTempDirectory("graft_manifest_count").toString
+    val input = SynthCorpus.docsRaw(spark, 200, 4).toDF()
+    var processed = 0
+    intercept[RuntimeException] {
+      Manifest.runBucketed(spark, input, dir, "url", 8) { df =>
+        processed += 1
+        if (processed > 3) throw new RuntimeException("simulated kill")
+        scoreFn(df)
+      }
+    }
+    assert(Manifest.committedBuckets(spark, dir) == Set(0L, 1L, 2L))
+
+    // 4 buckets would re-map urls: buckets 0-2 are committed under the
+    // 8-bucket layout, and bucket 3 alone would not hold the rest
+    val e = intercept[IllegalArgumentException] {
+      Manifest.runBucketed(spark, input, dir, "url", 4)(scoreFn)
+    }
+    assert(e.getMessage.contains("staged with 8 buckets"), e.getMessage)
+    assert(Manifest.committedBuckets(spark, dir) == Set(0L, 1L, 2L))
+
+    assert(Manifest.runBucketed(spark, input, dir, "url", 8)(scoreFn) == 5)
+    assert(Manifest.readCommitted(spark, dir).count() == 200)
+
+    // committed buckets beyond the requested count are refused as well
+    val beyond = intercept[IllegalArgumentException] {
+      Manifest.runBucketed(spark, input, dir, "url", 4)(scoreFn)
+    }
+    assert(beyond.getMessage.contains("beyond numBuckets = 4"), beyond.getMessage)
+  }
+
+  test("empty corpus commits every bucket with zero rows") {
+    val dir = Files.createTempDirectory("graft_manifest_empty").toString
+    val input = SynthCorpus.docsRaw(spark, 0, 4).toDF()
+    assert(Manifest.runBucketed(spark, input, dir, "url", 4)(scoreFn) == 4)
+    val m = spark.read.parquet(Manifest.manifestPath(dir))
+    assert(m.count() == 4)
+    assert(m.filter(col("n_rows") =!= 0L || col("n_kept") =!= 0L).count() == 0)
+    val out = Manifest.readCommitted(spark, dir)
+    assert(out.count() == 0)
+    assert(out.columns.toSeq == Seq("url", "lang", "overall_score", "keep"))
+    assert(Manifest.runBucketed(spark, input, dir, "url", 4)(scoreFn) == 0)
   }
 
   test("kill mid-run on a derive sink: resume recomputes zero committed buckets") {
@@ -125,6 +213,7 @@ class ManifestSpec extends SparkTestBase {
     // manifest metrics reflect the derive sink: n_rows = exploded examples
     val m = spark.read.parquet(Manifest.manifestPath(dir))
     assert(m.agg(sum("n_rows")).head().getLong(0) == clean.length)
+    assertStatsMatchOutput(dir)
   }
 
   test("pendingRows anti-join filters committed buckets") {
@@ -149,5 +238,6 @@ class ManifestSpec extends SparkTestBase {
     assert(total == 50)
     assert(m.filter(col("input_fingerprint") === 0L).count() == 0)
     assert(m.filter(col("duration_ms") < 0L).count() == 0)
+    assertStatsMatchOutput(dir)
   }
 }
