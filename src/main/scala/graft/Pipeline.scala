@@ -18,9 +18,9 @@ import graft.scrub.PiiScrub
   *
   * Plan structure (cheap-first, SURVEY.md §4.1): extraction and the cheap
   * gates are pure Catalyst expressions fused into one codegen span over the
-  * scan; the perplexity `mapPartitions` stage computes only for rows that
-  * survived the gates (per-row conditional inside the batch — no plan split,
-  * no shuffle); everything downstream is expressions again.
+  * scan; the native perplexity expression computes only for rows that
+  * survived the gates (a lazy per-row `when` — no plan split, no shuffle);
+  * everything downstream is expressions again.
   *
   * Scale notes: zero shuffles end-to-end for scoring (narrow transformations
   * only); the output is written partitioned by url-hash; summaries are
@@ -32,10 +32,7 @@ object Pipeline {
       /** analysis depth: "basic" skips stage 2/3 (P3, classifier.py:107-116) */
       depth: String = "full",
       minTextLength: Int = 300, // P5 (enhanced_paper_analyser.py:148)
-      keepThreshold: Double = Score.KeepThreshold,
-      /** broadcast + mapPartitions scorer instead of the native expression
-        * (the path for externally-trained model files). */
-      useMapPartitionsScorer: Boolean = false
+      keepThreshold: Double = Score.KeepThreshold
   )
 
   /** Suitability gate — the reference's benchmark-suitability check
@@ -115,18 +112,15 @@ object Pipeline {
         .withColumn("issues", array().cast("array<string>")), cfg)
     }
 
-    // M2: perplexity. The model is code-embedded and deterministic, so the
-    // default path scores through a native expression over the JVM-static
-    // model — keeping the ENTIRE pipeline one whole-stage-codegen span with
-    // no mapPartitions fence and no Row serialization. The `when` gate is
+    // M2: perplexity. The model is code-embedded and deterministic, so it
+    // scores through a native expression over the JVM-static model —
+    // keeping the ENTIRE pipeline one whole-stage-codegen span with no
+    // mapPartitions fence and no Row serialization. The `when` gate is
     // lazy per-row: stage-1 failures skip the model (cheap-first ordering,
-    // classifier.py:102-104). Set useMapPartitionsScorer for externally-
-    // trained models that must ship via broadcast.
-    val withPpl =
-      if (cfg.useMapPartitionsScorer) withPerplexityGated(withStage1, spark)
-      else withStage1.withColumn("ppl",
-        when(col("stage1_pass"), call_function("graft_perplexity", col("text")))
-          .otherwise(lit(Perplexity.MaxPpl)))
+    // classifier.py:102-104).
+    val withPpl = withStage1.withColumn("ppl",
+      when(col("stage1_pass"), call_function("graft_perplexity", col("text")))
+        .otherwise(lit(Perplexity.MaxPpl)))
 
     val withDims = withPpl
       .withColumn("dim_math_errors",
@@ -144,28 +138,6 @@ object Pipeline {
           col("dim_logical_consistency"), col("dim_literature_integration")))
 
     finish(withDims, cfg)
-  }
-
-  /** Gated perplexity: one typed mapPartitions pass; rows that failed the
-    * stage-1 gate skip the model entirely (conditional inside the batch).
-    */
-  private def withPerplexityGated(df: DataFrame, spark: SparkSession): DataFrame = {
-    import org.apache.spark.sql.{Encoders, Row}
-    import org.apache.spark.sql.types.DoubleType
-    val bc = spark.sparkContext.broadcast(Perplexity.buildModel())
-    val outSchema = df.schema.add("ppl", DoubleType, nullable = false)
-    val textIdx = df.schema.fieldIndex("text")
-    val gateIdx = df.schema.fieldIndex("stage1_pass")
-    df.mapPartitions { it =>
-      val m = bc.value
-      it.map { r =>
-        val ppl =
-          if (!r.isNullAt(gateIdx) && r.getBoolean(gateIdx))
-            m.score(if (r.isNullAt(textIdx)) null else r.getString(textIdx))
-          else Perplexity.MaxPpl
-        Row.fromSeq(r.toSeq :+ ppl)
-      }
-    }(Encoders.row(outSchema))
   }
 
   /** M3 + M4 + P1 + C13: recommendation, overall score, keep label, scrub.

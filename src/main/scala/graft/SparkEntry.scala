@@ -583,10 +583,31 @@ object SparkEntry {
         s"regexp_replace($acc, '$pEsc', '$r', 'g')"
       }
 
+  // DuckDB SQL helpers shared by the oracle queries below.
+
+  /** RE2 pattern → SQL literal: escape quotes, and turn REAL newline chars
+    * inside patterns into the RE2 \n escape — a raw newline followed by
+    * '|' would otherwise be EATEN by stripMargin and silently corrupt the
+    * alternation.
+    */
+  private def pat(p: String): String =
+    "'" + p.replace("'", "''").replace("\n", "\\n") + "'"
+
+  /** How many of `terms` occur in `over` (each counted 0/1). Terms are
+    * spliced as-is, so the term lists must be quote-free.
+    */
+  private def cnt(terms: Seq[String], over: String): String = terms
+    .map(w => s"(CASE WHEN contains($over, '$w') THEN 1 ELSE 0 END)")
+    .mkString(" + ")
+
+  /** Whether any of `terms` occurs in `over`. */
+  private def anyOf(terms: Seq[String], over: String): String = terms
+    .map(w => s"contains($over, '${w.replace("'", "''")}')")
+    .mkString("(", " OR ", ")")
+
   def oracleSql: Map[String, String] = {
-    val enCountSql = graft.lang.LangId.EnglishStopwords10
-      .map(w => s"(CASE WHEN contains(substr(lower(text),1,1000), '$w') THEN 1 ELSE 0 END)")
-      .mkString(" + ")
+    val enCountSql =
+      cnt(graft.lang.LangId.EnglishStopwords10, "substr(lower(text),1,1000)")
     val wcSql =
       "CASE WHEN length(trim(text)) = 0 THEN 0 ELSE array_length(regexp_split_to_array(trim(text), '\\s+')) END"
     // LSH hyperplanes are pure deterministic literals (Ann.hyperplanes) —
@@ -1032,12 +1053,6 @@ object SparkEntry {
         import graft.derive.Extract
         val corpusGlob = new java.io.File(
           "target/graft_fixture/corpus_400").getAbsolutePath + "/*.parquet"
-        // RE2 pattern → SQL literal: escape quotes, and turn REAL newline
-        // chars inside patterns into the RE2 \n escape — a raw newline
-        // followed by '|' would otherwise be EATEN by stripMargin and
-        // silently corrupt the alternation
-        def pat(p: String) =
-          "'" + p.replace("'", "''").replace("\n", "\\n") + "'"
         def joinedLen(patterns: Seq[String], cap: Int): String = {
           val lists = patterns
             .map(p => s"regexp_extract_all(text, ${pat(p)})").mkString(" || ")
@@ -1047,13 +1062,9 @@ object SparkEntry {
         val derLen = joinedLen(Extract.DerivationPatterns, 5)
         val asmLen = joinedLen(Extract.AssumptionPatterns, 10)
         val sampleSql = "substr(lower(text), 1, 1000)"
-        val enCnt = graft.lang.LangId.EnglishStopwords10
-          .map(w => s"(CASE WHEN contains($sampleSql, '$w') THEN 1 ELSE 0 END)")
-          .mkString(" + ")
-        val termCnt = (graft.rules.Heuristics.PhysicsIndicators ++
-          graft.rules.Heuristics.VixraIndicators)
-          .map(w => s"(CASE WHEN contains($sampleSql, '$w') THEN 1 ELSE 0 END)")
-          .mkString(" + ")
+        val enCnt = cnt(graft.lang.LangId.EnglishStopwords10, sampleSql)
+        val termCnt = cnt(graft.rules.Heuristics.PhysicsIndicators ++
+          graft.rules.Heuristics.VixraIndicators, sampleSql)
         val cleanTitle = graft.extract.Clean.titleCleanStr(BenchmarkTitleFixture)
         s"""WITH c AS (SELECT url, text FROM read_parquet('$corpusGlob')),
            |elig AS (
@@ -1079,11 +1090,6 @@ object SparkEntry {
         import graft.derive.RlBuilder
         val corpusGlob = new java.io.File(
           "target/graft_fixture/corpus_400").getAbsolutePath + "/*.parquet"
-        def pat(p: String) =
-          "'" + p.replace("'", "''").replace("\n", "\\n") + "'"
-        def cnt(terms: Seq[String], over: String) = terms
-          .map(w => s"(CASE WHEN contains($over, '$w') THEN 1 ELSE 0 END)")
-          .mkString(" + ")
         val sample = "substr(lower(text), 1, 2000)"
         val probs = cnt(RlBuilder.RlProblemIndicators, sample)
         val reas = cnt(RlBuilder.RlReasoningIndicators, sample)
@@ -1108,11 +1114,6 @@ object SparkEntry {
         import graft.derive.RlBuilder
         val corpusGlob = new java.io.File(
           "target/graft_fixture/corpus_400").getAbsolutePath + "/*.parquet"
-        def pat(p: String) =
-          "'" + p.replace("'", "''").replace("\n", "\\n") + "'"
-        def cnt(terms: Seq[String], over: String) = terms
-          .map(w => s"(CASE WHEN contains($over, '$w') THEN 1 ELSE 0 END)")
-          .mkString(" + ")
         val gate = cnt(RlBuilder.V3GateIndicators, "substr(lower(text), 1, 1500)")
         val ex = (RlBuilder.V3ExplicitExistence ++ RlBuilder.V3DerivationExistence)
           .zipWithIndex
@@ -1128,11 +1129,6 @@ object SparkEntry {
         import graft.derive.UgBuilders
         val corpusGlob = new java.io.File(
           "target/graft_fixture/corpus_400").getAbsolutePath + "/*.parquet"
-        def pat(p: String) =
-          "'" + p.replace("'", "''").replace("\n", "\\n") + "'"
-        def cnt(terms: Seq[String], over: String) = terms
-          .map(w => s"(CASE WHEN contains($over, '$w') THEN 1 ELSE 0 END)")
-          .mkString(" + ")
         val sample = "substr(lower(text), 1, 2000)"
         val gate = s"(${cnt(UgBuilders.UgPhysicsIndicators, sample)} + " +
           s"${cnt(UgBuilders.UgMathIndicators, sample)})"
@@ -1150,15 +1146,6 @@ object SparkEntry {
         import graft.derive.{Derive, Extract}
         val corpusGlob = new java.io.File(
           "target/graft_fixture/corpus_400").getAbsolutePath + "/*.parquet"
-        // RE2 pattern → SQL literal: escape quotes, and turn REAL newline
-        // chars inside patterns into the RE2 \n escape — a raw newline
-        // followed by '|' would otherwise be EATEN by stripMargin and
-        // silently corrupt the alternation
-        def pat(p: String) =
-          "'" + p.replace("'", "''").replace("\n", "\\n") + "'"
-        def cnt(terms: Seq[String], over: String) = terms
-          .map(w => s"(CASE WHEN contains($over, '$w') THEN 1 ELSE 0 END)")
-          .mkString(" + ")
         // _contains_english_physics_terms over a candidate block `m`
         val phys = cnt(Extract.EnglishPhysicsTerms, "lower(m)")
         val vix = cnt(Extract.VixraPhysicsTerms, "lower(m)")
@@ -1196,11 +1183,6 @@ object SparkEntry {
         import graft.derive.UgBuilders._
         val scoredGlob = new java.io.File(
           "target/graft_fixture/scored_400").getAbsolutePath + "/*.parquet"
-        def pat(p: String) =
-          "'" + p.replace("'", "''").replace("\n", "\\n") + "'"
-        def cnt(terms: Seq[String], over: String) = terms
-          .map(w => s"(CASE WHEN contains($over, '$w') THEN 1 ELSE 0 END)")
-          .mkString(" + ")
         def battery(patterns: Seq[String], minLen: Int) = patterns
           .map(p => s"list_filter(list_transform(regexp_extract_all(text, ${pat(p)}), " +
             s"x -> trim(x)), m -> length(m) > $minLen)")
@@ -1277,14 +1259,6 @@ object SparkEntry {
         import graft.extract.Clean
         val scoredGlob = new java.io.File(
           "target/graft_fixture/scored_400").getAbsolutePath + "/*.parquet"
-        def pat(p: String) =
-          "'" + p.replace("'", "''").replace("\n", "\\n") + "'"
-        def cnt(terms: Seq[String], over: String) = terms
-          .map(w => s"(CASE WHEN contains($over, '$w') THEN 1 ELSE 0 END)")
-          .mkString(" + ")
-        def anyOf(terms: Seq[String], over: String) = terms
-          .map(w => s"contains($over, '${w.replace("'", "''")}')")
-          .mkString("(", " OR ", ")")
         // battery: group-1 extraction per pattern → transform → filter
         def battery(patterns: Seq[String], mk: String => String,
                     pred: String): String =
@@ -1353,14 +1327,6 @@ object SparkEntry {
         import graft.derive.BenchmarkBuilders._
         val scoredGlob = new java.io.File(
           "target/graft_fixture/scored_400").getAbsolutePath + "/*.parquet"
-        def pat(p: String) =
-          "'" + p.replace("'", "''").replace("\n", "\\n") + "'"
-        def cnt(terms: Seq[String], over: String) = terms
-          .map(w => s"(CASE WHEN contains($over, '$w') THEN 1 ELSE 0 END)")
-          .mkString(" + ")
-        def anyOf(terms: Seq[String], over: String) = terms
-          .map(w => s"contains($over, '${w.replace("'", "''")}')")
-          .mkString("(", " OR ", ")")
         val eqCleanV3 = (x: String) =>
           s"trim(regexp_replace(regexp_replace($x, '\\s+', ' ', 'g'), " +
             s"${pat(EqStripClassV3)}, '', 'g'))"
@@ -1427,15 +1393,6 @@ object SparkEntry {
         import graft.derive.{Derive, Extract}
         val corpusGlob = new java.io.File(
           "target/graft_fixture/corpus_400").getAbsolutePath + "/*.parquet"
-        // RE2 pattern → SQL literal (same trap as q31/q38: real newlines in
-        // patterns must become RE2 \n or stripMargin corrupts alternations)
-        def pat(p: String) =
-          "'" + p.replace("'", "''").replace("\n", "\\n") + "'"
-        def cnt(terms: Seq[String], over: String) = terms
-          .map(w => s"(CASE WHEN contains($over, '$w') THEN 1 ELSE 0 END)")
-          .mkString(" + ")
-        def anyOf(terms: Seq[String], over: String) = terms
-          .map(w => s"contains($over, '$w')").mkString("(", " OR ", ")")
 
         // -- gate (same as q38) --
         val sample = "substr(lower(text), 1, 2000)"

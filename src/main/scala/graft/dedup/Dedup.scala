@@ -404,7 +404,7 @@ object Dedup {
     * partition. Cap metrics are value-identical to the window form's
     * (dropped postings = Σ df over capped tokens); measured at sf0.1
     * the join form also times at-or-under the window form (no local
-    * regression — BenchExtra `pfxdf` A/B).
+    * regression).
     *
     * Cost of the trade: the df aggregate is one more reference to
     * `toks` (a tok-only column-pruned explode + partial agg), so with

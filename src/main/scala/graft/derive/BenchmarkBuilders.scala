@@ -28,7 +28,7 @@ object BenchmarkBuilders {
   private def containsAny(c: Column, terms: Seq[String]): Column =
     terms.map(t => c.contains(t)).reduce(_ || _)
 
-  private def hits(c: Column, pattern: String, group: Int = 1): Column =
+  private def hits(c: Column, pattern: String, group: Int): Column =
     when(c.isNull, array().cast("array<string>"))
       .otherwise(regexp_extract_all(c, lit(pattern), lit(group)))
 

@@ -49,9 +49,6 @@ object HtmlText {
     "lsquo" -> "'", "rsquo" -> "'", "ldquo" -> "“", "rdquo" -> "”"
   )
 
-  private val CommentRe = "(?s)<!--.*?-->".r
-  private val ScriptStyleRe = "(?is)<(script|style|head|noscript)\\b[^>]*>.*?</\\1\\s*>".r
-  private val BlockOpenCloseRe = ("(?is)</?(" + BlockTags + ")\\b[^>]*>").r
   private val AnyTagRe = "(?s)<[^>]+>".r
   private val EntityRe = "&(#?[0-9a-zA-Z]+);".r
 

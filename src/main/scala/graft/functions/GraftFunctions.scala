@@ -77,8 +77,9 @@ case class ExtractCleanExpr(child: Expression) extends UnaryExpression {
 }
 
 /** M2 perplexity as a native expression over the JVM-static model (see
-  * Perplexity.Shared) — identical scores to the broadcast/mapPartitions
-  * path by construction (same Model.score).
+  * Perplexity.Shared) — the same Model.score the reference oracle calls.
+  * Null-intolerant: a null text yields null (Pipeline's stage-1 gate maps
+  * it to Perplexity.MaxPpl).
   */
 case class PerplexityExpr(child: Expression) extends UnaryExpression {
   override def dataType: DataType = org.apache.spark.sql.types.DoubleType

@@ -63,7 +63,9 @@ class CurateProbe extends SparkTestBase {
 
   test("chain budget on the scaling corpus (long docs)", ProbeTag) {
     val dir = "/tmp/graft_scaling_corpus_20000"
-    assume(new java.io.File(dir + "/_SUCCESS").exists(), "corpus not materialized")
+    if (!new java.io.File(dir + "/_SUCCESS").exists())
+      graft.fixtures.SynthCorpus.docsRaw(spark, 20000, 64).toDF()
+        .write.mode("overwrite").parquet(dir)
     graft.functions.GraftFunctions.register(spark)
     val raw = spark.read.parquet(dir)
     t("raw count")(raw.count())

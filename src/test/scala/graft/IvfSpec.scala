@@ -8,7 +8,7 @@ class IvfSpec extends SparkTestBase {
 
   // deterministic pseudo-random vectors, pure function of (id, d) —
   // same generator as AnnSpec
-  private def vec(id: Int, dim: Int = 16): Array[Float] =
+  private def vec(id: Int, dim: Int): Array[Float] =
     Array.tabulate(dim) { d =>
       var x = (id.toLong * 6364136223846793005L + d * 1442695040888963407L + 7L) | 1L
       x ^= x << 13; x ^= x >>> 7; x ^= x << 17

@@ -68,16 +68,24 @@ class PipelineParitySpec extends SparkTestBase {
     assert(f1 >= 0.99, f"F1 $f1%.4f < 0.99 (tp=$tp fp=$fp fn=$fn)")
   }
 
-  test("mapPartitions scorer path equals the native-expression path") {
-    val raw = SynthCorpus.docsRaw(spark, 120L, partitions = 4).toDF()
-    val a = Pipeline.score(raw, spark)
-      .select("url", "overall_score", "keep").collect()
-      .map(r => r.getString(0) -> (r.getDouble(1), r.getBoolean(2))).toMap
-    val b = Pipeline.score(raw, spark,
-      Pipeline.Config(useMapPartitionsScorer = true))
-      .select("url", "overall_score", "keep").collect()
-      .map(r => r.getString(0) -> (r.getDouble(1), r.getBoolean(2))).toMap
-    assert(a == b)
+  test("graft_perplexity equals Model.score on every row (null and empty text)") {
+    import spark.implicits._
+    graft.functions.GraftFunctions.register(spark)
+    val model = graft.score.Perplexity.buildModel()
+    val texts = SynthCorpus.docsRaw(spark, 120L, partitions = 4).toDF()
+      .select(col("url"), call_function("graft_extract_clean", col("html")).as("text"))
+      .union(Seq(("null-text", null: String), ("empty-text", "")).toDF("url", "text"))
+    val rows = texts
+      .select(col("url"), col("text"), call_function("graft_perplexity", col("text")))
+      .collect()
+    assert(rows.length == 122)
+    rows.foreach { r =>
+      // null-intolerant expression: null in, null out (the pipeline's
+      // stage-1 gate never passes a null text to it)
+      if (r.isNullAt(1)) assert(r.isNullAt(2), "null text must score null")
+      else assert(r.getDouble(2) == model.score(r.getString(1)),
+        s"perplexity differs from Model.score for ${r.getString(0)}")
+    }
   }
 
   test("scoring is invariant to partitioning (repartition(k) invariance)") {

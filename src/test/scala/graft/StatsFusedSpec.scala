@@ -168,18 +168,23 @@ class LangIdQualitySpec extends SparkTestBase {
   }
 }
 
-/** The two langid application forms must label identically. */
-class LangIdFormsSpec extends SparkTestBase {
-  test("UDF form equals mapPartitions form") {
+/** The shipped langid application labels exactly as the model does. */
+class LangIdUdfSpec extends SparkTestBase {
+  test("withLangNgram labels equal Model.predict on every row (null text included)") {
     import org.apache.spark.sql.functions._
+    import spark.implicits._
+    val model = graft.lang.LangId.buildModel()
     val texts = graft.fixtures.SynthCorpus.docsRaw(spark, 200, 4).toDF()
       .withColumn("text",
         graft.extract.Clean.basicClean(graft.extract.HtmlText.extractCol(col("html"))))
       .select("url", "text")
-    val a = graft.lang.LangId.withLangNgram(texts, "text", "lang", spark)
-      .select("url", "lang").collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    val b = graft.lang.LangId.withLangNgramMapPartitions(texts, "text", "lang", spark)
-      .select("url", "lang").collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(a == b)
+      .union(Seq(("null-text", null: String)).toDF("url", "text"))
+    val rows = graft.lang.LangId.withLangNgram(texts, "text", "lang", spark)
+      .select("url", "text", "lang").collect()
+    assert(rows.length == 201)
+    rows.foreach { r =>
+      assert(r.getString(2) == model.predict(r.getString(1)),
+        s"label differs from Model.predict for ${r.getString(0)}")
+    }
   }
 }
